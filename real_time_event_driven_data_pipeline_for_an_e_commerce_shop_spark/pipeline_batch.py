@@ -147,18 +147,36 @@ def run(
             write_validated_zone(valid, vdir)
         paths["validated"] = vdir
 
-    kpis = kpi.run_transformation(valid["products"], valid["orders"], valid["order_items"])
-
     cat_sink = KeyedParquetUpsertSink(os.path.join(out_dir, "category_kpi"), "order_date")
     ord_sink = KeyedParquetUpsertSink(os.path.join(out_dir, "order_kpi"), "order_date")
-    cat_sink.upsert(kpis["category_kpi"])
-    ord_sink.upsert(kpis["order_kpi"])
-    paths["category_kpi"] = cat_sink.path
-    paths["order_kpi"] = ord_sink.path
-
     ts = run_ts or _dt.datetime.now(_dt.timezone.utc).strftime("%Y-%m-%d-T-%H:%M:%S")
     processed = os.path.join(out_dir, "processed")
-    write_processed_zone(kpis, processed, ts)
+
+    # Each KPI output (one row per date × category) feeds both its
+    # upsert and the processed zone: persisted, it is computed once.
+    # A plan cached while this conf is off keeps its pre-coalescing
+    # shuffle width (512 tasks, ~100 files per write) instead of the
+    # one or two partitions AQE picks for an output this small.
+    cached_repartition = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    prev = spark.conf.get(cached_repartition)
+    spark.conf.set(cached_repartition, "true")
+    kpis = {}
+    try:
+        kpis = {
+            name: df.persist()
+            for name, df in kpi.run_transformation(
+                valid["products"], valid["orders"], valid["order_items"]
+            ).items()
+        }
+        cat_sink.upsert(kpis["category_kpi"])
+        ord_sink.upsert(kpis["order_kpi"])
+        write_processed_zone(kpis, processed, ts)
+    finally:
+        spark.conf.set(cached_repartition, prev)
+        for df in kpis.values():
+            df.unpersist()
+    paths["category_kpi"] = cat_sink.path
+    paths["order_kpi"] = ord_sink.path
     paths["processed"] = os.path.join(processed, ts)
 
     if archive:

@@ -12,9 +12,10 @@ Mapping, piece by piece:
   code.
 * readiness gate (``:44-65``, S3-op) → :func:`sources.readers.
   require_inputs` pre-flight.
-* Task1 → Task2 sequencing (``StateMachine.txt``) → one lazy DataFrame
-  composition: validation and KPI stages fuse into a single plan per
-  micro-batch (Catalyst sees through both).
+* Task1 → Task2 sequencing (``StateMachine.txt``) → one micro-batch
+  plan: the validated orders and the item-grain KPI fact are each
+  built once and shared by every step that needs them (see
+  :func:`run_event_driven_pipeline`).
 * archive-after-process (``Task_2/task_2.py:237-263``, S8) →
   ``cleanSource=archive`` on the file source.
 * ``trigger(availableNow=True)`` reproduces the reference's
@@ -59,8 +60,26 @@ def run_event_driven_pipeline(
 
     The order_items stream drives processing (it is the fact at item
     grain); products/orders are re-read as batch dimensions per
-    micro-batch — the reference does the same full re-read of all
-    three inputs per trigger (``task_2.py:271-273``).
+    micro-batch, as the reference re-reads all three inputs per
+    trigger (``task_2.py:271-273``). Each micro-batch runs this plan:
+
+    1. the orders CSV is parsed and validated once, projected to
+       ``(order_id, order_date, is_returned)`` and persisted;
+    2. one collect brings the ``order_date``s touched by the
+       micro-batch's valid items to the driver (bounded by the dates
+       in one upload). It is the only scan of the micro-batch; an
+       empty list — no items, or none that pass validation — ends the
+       micro-batch without writing;
+    3. the persisted orders are filtered to the touched dates *before*
+       the J1 semi-join and the J2 join, and the item fact is built
+       and persisted. This reads the items history and the products
+       once: the one full re-read that remains, since a late item can
+       change any past day;
+    4. ``category_kpi`` and ``order_kpi`` both aggregate the persisted
+       fact and upsert their date partitions.
+
+    Both persisted frames are released in ``finally``, so a failing
+    upsert leaves no cached state behind in a long-lived stream.
     """
     cat_sink = KeyedParquetUpsertSink(
         os.path.join(out_dir, "category_kpi"), "order_date"
@@ -80,25 +99,36 @@ def run_event_driven_pipeline(
     items_stream = reader.csv(os.path.join(raw_dir, "order_items"))
 
     def process_batch(new_items: DataFrame, epoch_id: int) -> None:
-        if new_items.isEmpty():
-            return
         raw = load_ecommerce_csv(spark, raw_dir)
-        valid = validate.run_validation(
-            raw["products"], raw["orders"], raw["order_items"]
+        orders = (
+            kpi.with_return_flag(validate.validate_orders(raw["orders"]))
+            .select("order_id", "order_date", "is_returned")
+            .persist()
         )
-        orders_ctx = kpi.with_return_flag(valid["orders"])
-        # dates whose KPIs are affected by this batch of item files
-        touched = (
-            validate.validate_order_items(new_items, valid["orders"])
-            .join(orders_ctx.select("order_id", "order_date"), "order_id")
-            .select("order_date")
-            .distinct()
-        )
-        fact = kpi.build_item_fact(
-            valid["order_items"], orders_ctx, valid["products"]
-        ).join(F.broadcast(touched), "order_date", "left_semi")
-        cat_sink.upsert(kpi.category_kpi(fact))
-        ord_sink.upsert(kpi.order_kpi(fact))
+        fact = None
+        try:
+            touched = [
+                r.order_date
+                for r in validate.validate_order_items(new_items, orders)
+                .join(orders, "order_id")
+                .select("order_date")
+                .distinct()
+                .collect()
+            ]
+            if not touched:
+                return
+            orders_touched = orders.filter(F.col("order_date").isin(touched))
+            fact = kpi.build_item_fact(
+                validate.validate_order_items(raw["order_items"], orders_touched),
+                orders_touched,
+                validate.validate_products(raw["products"]),
+            ).persist()
+            cat_sink.upsert(kpi.category_kpi(fact))
+            ord_sink.upsert(kpi.order_kpi(fact))
+        finally:
+            orders.unpersist()
+            if fact is not None:
+                fact.unpersist()
 
     q = (
         items_stream.writeStream.foreachBatch(process_batch)

@@ -9,10 +9,15 @@ import os
 
 import pytest
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 
+from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark import pipeline_batch
 from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.operators import (
     events as events_ops,
+)
+from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sinks.kv import (
+    KeyedParquetUpsertSink,
 )
 from real_time_event_driven_data_pipeline_for_an_e_commerce_shop_spark.sources.readers import (
     load_testdata,
@@ -81,6 +86,148 @@ def test_event_driven_pipeline_incremental(spark, tmp_path):
     # exactly-once: re-running with no new files changes nothing
     run_event_driven_pipeline(spark, raw, out, ckpt)
     assert spark.read.parquet(f"{out}/order_kpi").count() == 2
+
+
+ORDERS_HEADER = ORDERS_CSV.splitlines()[0]
+ITEMS_HEADER = ITEMS1_CSV.splitlines()[0]
+
+
+def _orders_csv(*rows: tuple) -> str:
+    """(order_id, user_id, created_at, returned_at) → reference CSV."""
+    lines = [
+        f"{oid},{uid},delivered,{ts},{ret},{ts},{ts},1"
+        for oid, uid, ts, ret in rows
+    ]
+    return "\n".join([ORDERS_HEADER, *lines]) + "\n"
+
+
+def _items_csv(*rows: tuple) -> str:
+    """(id, order_id, product_id, sale_price) → reference CSV."""
+    ts = "2025-03-08T10:00:00"
+    lines = [
+        f"{iid},{oid},100,{pid},delivered,{ts},{ts},{ts},,{price}"
+        for iid, oid, pid, price in rows
+    ]
+    return "\n".join([ITEMS_HEADER, *lines]) + "\n"
+
+
+#: Three uploads (orders file + items file each). The second carries
+#: late items of first-upload orders; every upload carries orphan,
+#: null, non-positive-price or dangling-product (id 9) items; every
+#: item of the third fails validation. Order 4 has a null user_id, so
+#: its items are orphans too.
+UPLOADS = [
+    (
+        _orders_csv(
+            (1, 100, "2025-03-08T10:00:00", ""),
+            (2, 101, "2025-03-08T11:00:00", "2025-03-10T09:00:00"),
+            (3, 102, "2025-03-09T09:00:00", ""),
+            (4, "", "2025-03-09T10:00:00", ""),
+        ),
+        _items_csv(
+            (10, 1, 1, 10.0), (11, 1, 2, 8.0), (12, 2, 1, 10.0),
+            (13, 3, 2, 8.0), (14, 99, 1, 5.0), ("", 1, 1, 5.0),
+            (16, 1, 2, ""), (17, 1, 1, -3.0), (18, 2, 9, 7.5),
+            (19, 4, 1, 6.0),
+        ),
+    ),
+    (
+        _orders_csv((5, 104, "2025-03-10T08:00:00", "")),
+        _items_csv(
+            (20, 5, 3, 12.5), (21, 1, 3, 4.25), (22, 3, 9, 6.0),
+            (23, 2, 2, 0.0),
+        ),
+    ),
+    (
+        _orders_csv((6, 105, "2025-03-11T08:00:00", "")),
+        _items_csv(
+            (30, 6, 1, 0.0), (31, 6, "", 3.0), (32, 98, 1, 3.0),
+            (33, 4, 1, 3.0),
+        ),
+    ),
+]
+
+
+def _land_upload(raw: str, i: int) -> None:
+    orders, items = UPLOADS[i]
+    _write(f"{raw}/orders/upload{i}.csv", orders)
+    _write(f"{raw}/order_items/upload{i}.csv", items)
+
+
+def _files_under(path: str) -> dict[str, int]:
+    return {
+        os.path.relpath(os.path.join(d, f), path): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _, names in os.walk(path)
+        for f in names
+    }
+
+
+def _table_rows(spark, path: str) -> list[tuple]:
+    df = spark.read.parquet(path)
+    return sorted(tuple(r) for r in df.select(sorted(df.columns)).collect())
+
+
+def _persisted_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_event_driven_uploads_match_batch_pipeline(spark, tmp_path):
+    """One trigger per upload converges to the batch pipeline over the
+    same zone, and an upload whose items all fail validation rewrites
+    no KPI partition."""
+    raw, out, ckpt = (str(tmp_path / d) for d in ("raw", "out", "ckpt"))
+    _write(f"{raw}/products.csv", PRODUCTS_CSV + "3,C-3,1.0,Toys,Ball,Acme,4.0,Kids\n")
+    for i in range(2):
+        _land_upload(raw, i)
+        run_event_driven_pipeline(spark, raw, out, ckpt)
+    before = _files_under(out)
+    _land_upload(raw, 2)
+    run_event_driven_pipeline(spark, raw, out, ckpt)
+    assert _files_under(out) == before
+
+    batch_out = str(tmp_path / "batch")
+    held = _persisted_rdd_ids(spark)
+    paths = pipeline_batch.run(spark, raw, batch_out)
+    assert _persisted_rdd_ids(spark) == held
+    # the persisted KPI outputs keep AQE's coalesced width: a handful
+    # of processed-zone files, not one per initial shuffle partition
+    for table in ("category_kpi", "order_kpi"):
+        parts = [f for f in os.listdir(f"{paths['processed']}/{table}") if f.endswith(".csv")]
+        assert 1 <= len(parts) <= 4
+        got = _table_rows(spark, f"{out}/{table}")
+        assert got == _table_rows(spark, f"{batch_out}/{table}")
+    days = {str(r.order_date) for r in spark.read.parquet(f"{out}/order_kpi").collect()}
+    assert days == {"2025-03-08", "2025-03-09", "2025-03-10"}
+
+
+def test_event_driven_releases_persisted_state(spark, tmp_path, monkeypatch):
+    """Nothing a micro-batch persists outlives it: not after the
+    pipeline returns, and not after an upsert raises mid-batch."""
+    raw = str(tmp_path / "raw")
+    _write(f"{raw}/products.csv", PRODUCTS_CSV)
+    _land_upload(raw, 0)
+    held = _persisted_rdd_ids(spark)
+    run_event_driven_pipeline(
+        spark, raw, str(tmp_path / "out"), str(tmp_path / "ckpt")
+    )
+    assert _persisted_rdd_ids(spark) == held
+
+    real_upsert = KeyedParquetUpsertSink.upsert
+    calls = []
+
+    def upsert_then_fail(self, batch):
+        calls.append(self.path)
+        if len(calls) == 2:
+            raise RuntimeError("second upsert fails")
+        real_upsert(self, batch)
+
+    monkeypatch.setattr(KeyedParquetUpsertSink, "upsert", upsert_then_fail)
+    with pytest.raises(StreamingQueryException, match="second upsert fails"):
+        run_event_driven_pipeline(
+            spark, raw, str(tmp_path / "out2"), str(tmp_path / "ckpt2")
+        )
+    assert len(calls) == 2
+    assert _persisted_rdd_ids(spark) == held
 
 
 @pytest.fixture()
